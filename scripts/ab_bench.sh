@@ -3,27 +3,17 @@
 # Usage: ab_bench.sh <old_cls> <new_cls> <keys> <rounds> [sfdir]
 # Each side runs graft.Bench (REPS honored via SPARK_GRAFT_REPS, default 2);
 # uniform host slowdown cancels in the pairing (OPTIMIZATION_r12.md method).
+# Host-sized: local[nproc] unless SPARK_GRAFT_CPUS is set, heap by the
+# tier-1 rule (jvm_env.sh).
 set -u
+. "$(dirname "$0")/jvm_env.sh"
 OLD=$1; NEW=$2; KEYS=$3; ROUNDS=${4:-2}; SF=${5:-/root/testdata/sf0.1}
-JFLAGS="--add-opens=java.base/java.lang=ALL-UNNAMED \
- --add-opens=java.base/java.lang.invoke=ALL-UNNAMED \
- --add-opens=java.base/java.lang.reflect=ALL-UNNAMED \
- --add-opens=java.base/java.io=ALL-UNNAMED \
- --add-opens=java.base/java.net=ALL-UNNAMED \
- --add-opens=java.base/java.nio=ALL-UNNAMED \
- --add-opens=java.base/java.util=ALL-UNNAMED \
- --add-opens=java.base/java.util.concurrent=ALL-UNNAMED \
- --add-opens=java.base/java.util.concurrent.atomic=ALL-UNNAMED \
- --add-opens=java.base/sun.nio.ch=ALL-UNNAMED \
- --add-opens=java.base/sun.nio.cs=ALL-UNNAMED \
- --add-opens=java.base/sun.security.action=ALL-UNNAMED \
- --add-opens=java.base/sun.util.calendar=ALL-UNNAMED"
 for r in $(seq 1 "$ROUNDS"); do
   for side in old new; do
     cls=$OLD; [ "$side" = new ] && cls=$NEW
-    out=$(SPARK_GRAFT_SF_DIR=$SF SPARK_GRAFT_CPUS=32 \
+    out=$(SPARK_GRAFT_SF_DIR=$SF SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-$HOST_CPUS} \
       SPARK_GRAFT_QUERIES="$KEYS" SPARK_GRAFT_REPS=${SPARK_GRAFT_REPS:-2} \
-      java -Xmx100g $JFLAGS -cp "$cls:/opt/spark/jars/*" graft.Bench 2>/dev/null | tail -1)
+      java -Xmx"$HOST_HEAP" "${JAVA_OPENS[@]}" -cp "$cls:$SPARK_CP" graft.Bench 2>/dev/null | tail -1)
     echo "{\"round\": $r, \"side\": \"$side\", \"bench\": $out}"
   done
 done

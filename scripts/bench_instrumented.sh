@@ -5,8 +5,11 @@
 # Writes nothing into the repo: BENCH_LAST.json goes to the scratch
 # SPARK_GRAFT_REPO so the committed artifact stays intact.
 #
+# Host-sized like ab_bench.sh (jvm_env.sh).
+#
 # Usage: scripts/bench_instrumented.sh [outPrefix=/tmp/bench_inst]
 set -u
+. "$(dirname "$0")/jvm_env.sh"
 cd /root/repo
 OUT=${1:-/tmp/bench_inst}
 SNAP=$(mktemp -d /tmp/graft_classes_inst_XXXX)
@@ -18,25 +21,12 @@ mkdir -p /tmp/benchrepo
 [ -f /tmp/benchrepo/BENCH_LAST.json ] || cp BENCH_LAST.json /tmp/benchrepo/
 SPARK_GRAFT_REPO=/tmp/benchrepo \
 SPARK_GRAFT_SF_DIR=${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1} \
-SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32} \
+SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-$HOST_CPUS} \
 SPARK_GRAFT_REPS=${SPARK_GRAFT_REPS:-1} \
-java -Xmx100g \
-  --add-opens=java.base/java.lang=ALL-UNNAMED \
-  --add-opens=java.base/java.lang.invoke=ALL-UNNAMED \
-  --add-opens=java.base/java.lang.reflect=ALL-UNNAMED \
-  --add-opens=java.base/java.io=ALL-UNNAMED \
-  --add-opens=java.base/java.net=ALL-UNNAMED \
-  --add-opens=java.base/java.nio=ALL-UNNAMED \
-  --add-opens=java.base/java.util=ALL-UNNAMED \
-  --add-opens=java.base/java.util.concurrent=ALL-UNNAMED \
-  --add-opens=java.base/java.util.concurrent.atomic=ALL-UNNAMED \
-  --add-opens=java.base/sun.nio.ch=ALL-UNNAMED \
-  --add-opens=java.base/sun.nio.cs=ALL-UNNAMED \
-  --add-opens=java.base/sun.security.action=ALL-UNNAMED \
-  --add-opens=java.base/sun.util.calendar=ALL-UNNAMED \
+java -Xmx"$HOST_HEAP" "${JAVA_OPENS[@]}" \
   -Xlog:gc*:file="$OUT.gc.log":time,uptime \
   -Xlog:codecache=info:file="$OUT.codecache.log":time,uptime \
-  -cp "$SNAP:/opt/spark/jars/*" graft.Bench \
+  -cp "$SNAP:$SPARK_CP" graft.Bench \
   > "$OUT.out" \
   2> "$OUT.err"
 echo "rc=$?"

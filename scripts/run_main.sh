@@ -4,23 +4,13 @@
 # Snapshots the classes dir first: Spark's ClosureCleaner re-reads class
 # bytes at job-submit time, so an sbt recompile under a running JVM crashes
 # it (NPE: "capturingClassReader is null").
+# Host-sized: local[nproc] unless SPARK_GRAFT_CPUS is set, heap by the
+# tier-1 rule (jvm_env.sh).
 # Usage: scripts/run_main.sh graft.BenchPipeline [args...]
+. "$(dirname "$0")/jvm_env.sh"
 cd /root/repo
 SNAP=$(mktemp -d /tmp/graft_classes_XXXX)
 cp -r target/scala-2.13/classes/. "$SNAP/"
 trap 'rm -rf "$SNAP"' EXIT
-java -Xmx100g \
-  --add-opens=java.base/java.lang=ALL-UNNAMED \
-  --add-opens=java.base/java.lang.invoke=ALL-UNNAMED \
-  --add-opens=java.base/java.lang.reflect=ALL-UNNAMED \
-  --add-opens=java.base/java.io=ALL-UNNAMED \
-  --add-opens=java.base/java.net=ALL-UNNAMED \
-  --add-opens=java.base/java.nio=ALL-UNNAMED \
-  --add-opens=java.base/java.util=ALL-UNNAMED \
-  --add-opens=java.base/java.util.concurrent=ALL-UNNAMED \
-  --add-opens=java.base/java.util.concurrent.atomic=ALL-UNNAMED \
-  --add-opens=java.base/sun.nio.ch=ALL-UNNAMED \
-  --add-opens=java.base/sun.nio.cs=ALL-UNNAMED \
-  --add-opens=java.base/sun.security.action=ALL-UNNAMED \
-  --add-opens=java.base/sun.util.calendar=ALL-UNNAMED \
-  -cp "$SNAP:/opt/spark/jars/*" "$@"
+SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-$HOST_CPUS} \
+java -Xmx"$HOST_HEAP" "${JAVA_OPENS[@]}" -cp "$SNAP:$SPARK_CP" "$@"

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.MapPipeline.Barrier
 import graft.expr.PortableHash
+import graft.ops.Checkpointer
 
 /** The COMPOSED training-data pipeline — the LLM-side sibling of
   * [[graft.MapPipeline]]: every stage exists as an oracle-checked query
@@ -88,9 +89,38 @@ object CorpusPipeline {
       cdcMaxDupPpm: Int = 0,
       onStage: (String, Double) => Unit = (_, _) => ())
 
+  /** The corpus side of the three default-on admission gates, kept as
+    * the cut frames the build already made, so [[admitDelta]] probes them
+    * and never re-tokenizes or re-hashes corpus text:
+    *
+    *   - `fps`: (doc_id, fp) redacted-text fingerprints of the hygiene
+    *     INPUT (`lineClean`), the fingerprint columns of the
+    *     [[Scrub.redactedFrame]] cut that [[Scrub.cleanCorpus]] keys on;
+    *   - `sig`: the [[Dedup.SignatureIndex]] of the near-dup INPUT
+    *     (`clean`), as the near-dup stage built it;
+    *   - `wins`: the (doc_id, pos, wh) [[Substring.fastWindowFrame]] cut of
+    *     the span-stage INPUT (`gated`); empty when the span stage is off.
+    *
+    * [[run]] fills it from its own stage cuts, [[admitDelta]] returns the
+    * batch's three frames in [[DeltaResult.probe]], [[mergeDelta]] unions
+    * them in, [[compactState]] re-cuts them, and [[deriveProbe]] rebuilds
+    * the probe from a state's frames. All cuts go through
+    * [[graft.ops.Checkpointer.Local]]: executor-local blocks, no barrier
+    * tables, so a state reloaded from its barrier tables has no probe
+    * until [[deriveProbe]] builds one (one pass over the corpus text).
+    */
+  case class Probe(fps: DataFrame, sig: Dedup.SignatureIndex, wins: DataFrame) {
+    /** The probe of two disjoint-id corpora: each member is per-doc rows. */
+    def union(o: Probe): Probe =
+      Probe(fps.unionByName(o.fps), sig.union(o.sig), wins.unionByName(o.wins))
+    def map(f: DataFrame => DataFrame): Probe =
+      Probe(f(fps), Dedup.SignatureIndex(f(sig.banded), f(sig.sets)), f(wins))
+  }
+
   case class Result(urlKept: DataFrame, lineClean: DataFrame, clean: DataFrame,
                     deduped: DataFrame, gated: DataFrame, scrubbed: DataFrame,
-                    mixed: DataFrame, shardSeqs: DataFrame, report: DataFrame)
+                    mixed: DataFrame, shardSeqs: DataFrame, report: DataFrame,
+                    probe: Probe)
 
   private def timed[T](cfg: Config, name: String)(body: => T): T = {
     val t0 = System.nanoTime()
@@ -167,6 +197,25 @@ object CorpusPipeline {
       .select("doc_id")
   }
 
+  /** The span stage's window frame of `docs`, cut; when the stage is off,
+    * an empty frame of the same schema (a zero limit plans no job).
+    */
+  private def spanWindows(docs: DataFrame, cfg: Config): DataFrame =
+    if (cfg.scrubWindowTok <= 0) Substring.fastWindowFrame(docs, 1).limit(0)
+    else Checkpointer.Local.cut(Substring.fastWindowFrame(docs, cfg.scrubWindowTok))
+
+  /** The [[Probe]] of `state`, derived from its frames (hygiene input
+    * `lineClean`, near-dup input `clean`, span input `gated`) with the same
+    * operators [[run]] uses — for a state reloaded from its barrier tables.
+    * The result equals, row set for row set, the probe that [[run]] and
+    * the chained [[mergeDelta]] loop carry for the same frames.
+    */
+  def deriveProbe(state: Result, cfg: Config = Config()): Probe =
+    Probe(
+      Checkpointer.Local.cut(Scrub.redactedFrame(state.lineClean).select("doc_id", "fp")),
+      Dedup.signatureIndex(state.clean, cfg.shingleSize, cfg.numPerms, cfg.numBands),
+      spanWindows(state.gated, cfg))
+
   private def docStat(stage: Int, name: String, df: DataFrame): DataFrame =
     df.agg(count(lit(1)).as("n_docs"),
         sum(size(TextAnalysis.tokens(col("text"))).cast("long")).as("n_tokens"))
@@ -204,17 +253,18 @@ object CorpusPipeline {
     }
 
     // ---- stage 1: hygiene --------------------------------------------
-    val clean = timed(cfg, "hygiene") {
-      val verdicts = Scrub.cleanCorpus(lineClean, cfg.minQuality, cfg.maxTop2)
-      barrier.materialize(spark,
+    val (clean, fps) = timed(cfg, "hygiene") {
+      val red = Checkpointer.Local.cut(Scrub.redactedFrame(lineClean))
+      val verdicts = Scrub.cleanCorpusFrom(red, cfg.minQuality, cfg.maxTop2)
+      (barrier.materialize(spark,
         lineClean.join(verdicts.filter(col("admitted")).select("doc_id"), Seq("doc_id")),
-        "corpus_clean")
+        "corpus_clean"), red.select("doc_id", "fp"))
     }
 
     // ---- stage 2: near-dup dedup -------------------------------------
-    val deduped = timed(cfg, "neardup") {
-      val pairs = Dedup
-        .verifiedJaccard(clean, cfg.shingleSize, cfg.numPerms, cfg.numBands)
+    val (deduped, sig) = timed(cfg, "neardup") {
+      val sig = Dedup.signatureIndex(clean, cfg.shingleSize, cfg.numPerms, cfg.numBands)
+      val pairs = Dedup.verifiedJaccardFrom(sig)
         .filter(round(col("jaccard"), 6) >= cfg.dupJaccard)
         .select(col("a"), col("b"))
       // star-CC roots survive; every other cluster member is dropped, so
@@ -223,8 +273,8 @@ object CorpusPipeline {
       val losers = Dedup.clusters(pairs)
         .filter(col("doc_id") =!= col("cluster_id"))
         .select(col("doc_id"))
-      barrier.materialize(spark,
-        clean.join(losers, Seq("doc_id"), "left_anti"), "corpus_dedup")
+      (barrier.materialize(spark,
+        clean.join(losers, Seq("doc_id"), "left_anti"), "corpus_dedup"), sig)
     }
 
     // ---- stages 2.2/2.3: novelty admission gates (opt-in) ------------
@@ -250,13 +300,14 @@ object CorpusPipeline {
     // After doc-level dedup: whole-doc near-dups are gone, but shared
     // boilerplate/quoted spans inside SURVIVING docs remain — rewrite
     // them out (keep-one ownership), drop docs scrubbed to zero tokens.
-    val scrubbed = timed(cfg, "span_scrub") {
-      if (cfg.scrubWindowTok <= 0) gated
+    val (scrubbed, wins) = timed(cfg, "span_scrub") {
+      val wins = spanWindows(gated, cfg)
+      if (cfg.scrubWindowTok <= 0) (gated, wins)
       else {
-        val sc = Substring.scrub(gated, cfg.scrubWindowTok)
+        val sc = Substring.scrubWith(gated, wins, cfg.scrubWindowTok)
           .filter(col("n_kept") > 0)
           .select(col("doc_id"), col("clean_text"))
-        barrier.materialize(spark, rewriteText(gated, sc), "corpus_scrubbed")
+        (barrier.materialize(spark, rewriteText(gated, sc), "corpus_scrubbed"), wins)
       }
     }
 
@@ -282,7 +333,7 @@ object CorpusPipeline {
       .orderBy("stage_idx")
 
     Result(urlKept, lineClean, clean, deduped, gated, scrubbed, mixed,
-      shardSeqs, report)
+      shardSeqs, report, Probe(fps, sig, wins))
   }
 
   /** Stages 3-4 — the CORPUS-GLOBAL tail of the pipeline (per-language
@@ -356,22 +407,31 @@ object CorpusPipeline {
   /** Output of [[admitDelta]]: the admitted delta rows in the
     * scrubbed-stage shape, a per-delta-doc verdict frame (`dropped_at`
     * names the first gate that rejected the doc; null = admitted), the
-    * delta shrinkage report, and the delta's per-stage survivor frames
-    * (`urlKept`/`clean`/`deduped`) — the probe-state increments
-    * [[mergeDelta]] folds into the frozen corpus so the NEXT delta's
-    * gates see this one's documents.
+    * delta shrinkage report, the delta's per-stage survivor frames
+    * (`urlKept`/`clean`/`deduped`) and the [[Probe]] frames of the batch
+    * alone — the state increments [[mergeDelta]] folds into the frozen
+    * corpus so the NEXT delta's gates see this one's documents.
     */
   case class DeltaResult(admitted: DataFrame, verdicts: DataFrame,
                          report: DataFrame, urlKept: DataFrame,
                          lineClean: DataFrame, clean: DataFrame,
-                         deduped: DataFrame, gated: DataFrame)
+                         deduped: DataFrame, gated: DataFrame,
+                         probe: Probe)
 
   /** Incremental admission — the production daily-crawl shape: run a NEW
     * delta batch through the same gates as [[run]] against the FROZEN
     * state of an already-pipelined corpus (the [[Result]] of a prior
-    * run, production-wise reloaded from its barrier tables). The corpus
-    * is never recomputed; each gate costs work linear in the delta plus
-    * one probe pass of the corresponding frozen corpus stage.
+    * run or of a [[mergeDelta]] chain). The corpus is never recomputed:
+    * the hygiene, near-dup and span gates build only the batch's own
+    * frames and probe `state.probe ∪ batch` — the [[Probe]] cuts the
+    * build made and each merge extended — so their cost is linear in the
+    * delta plus one read of the cut probe frames, with no tokenize or
+    * hash pass over corpus text. A state reloaded from its barrier tables
+    * carries no cut blocks: rebuild its probe once with [[deriveProbe]]
+    * (`state.copy(probe = deriveProbe(state, cfg))`). The probe is keyed
+    * to `cfg`'s shingle, minhash and window parameters, which must be the
+    * ones the state was built with. The opt-in url, line, winnow and cdc
+    * gates still derive their corpus side from the state frames per call.
     *
     * Contract: doc ids are monotonic — every delta id exceeds every
     * corpus id (the ingestion-watermark convention every *_incremental
@@ -393,12 +453,13 @@ object CorpusPipeline {
     *     keeper is the min id per REDACTED fingerprint over the union
     *     hygiene INPUT (= lineClean when the line stage is on, = urlKept
     *     otherwise — state.lineClean aliases urlKept then), so the probe
-    *     side is state.lineClean (a quality-REJECTED corpus doc still
-    *     blocks an identical delta doc, exactly as in the union run).
-    *   - near-dup: ONE signature pass over corpus-clean ∪ delta-clean
-    *     (at production scale the persisted signatureIndex replaces the
-    *     corpus side); all candidate pairs touching the delta are
-    *     verified, then corpus partners collapse to a single sentinel
+    *     side is `probe.fps`, the fingerprints of state.lineClean (a
+    *     quality-REJECTED corpus doc still blocks an identical delta doc,
+    *     exactly as in the union run).
+    *   - near-dup: the batch's own signature index, unioned with
+    *     `probe.sig` (the index of state.clean), is the index of
+    *     corpus-clean ∪ delta-clean; all candidate pairs touching the
+    *     delta are verified, then corpus partners collapse to a single sentinel
     *     node (-1) before the star-CC — every corpus-connected component
     *     roots below the id boundary, so delta verdicts match the union
     *     run bit-exactly, INCLUDING transitive chains (a delta doc
@@ -410,10 +471,11 @@ object CorpusPipeline {
     *     corpus carrier out-ranks every delta doc under monotonic ids)
     *     or an earlier delta doc does — [[noveltyDropsDelta]]; corpus
     *     verdicts are D-independent, so the frozen probe is exact.
-    *   - span scrub: [[Substring.scrubAgainst]] the frozen GATED-stage
-    *     corpus window fingerprints (pre-scrub text — the union run
-    *     derives ownership from the span stage's input frame, which is
-    *     the novelty-gate output, = the deduped frame when gates are off).
+    *   - span scrub: [[Substring.scrubAgainst]] `probe.wins`, the
+    *     GATED-stage corpus window fingerprints (pre-scrub text — the
+    *     union run derives ownership from the span stage's input frame,
+    *     which is the novelty-gate output, = the deduped frame when gates
+    *     are off).
     *
     * Known, accepted divergence (any frozen-corpus admission has it): a
     * delta doc bridging two separate corpus near-dup clusters merges
@@ -467,33 +529,27 @@ object CorpusPipeline {
     }
 
     // ---- stage 1: hygiene + frozen-corpus exact probe ----------------
-    // probe side = corpus lineClean: the union run's exact keeper is the
-    // min id per redacted fingerprint over the HYGIENE INPUT, which with
-    // the line stage on is lineClean(C ∪ D) — and = urlKept when off
-    // (lineClean aliases urlKept then, so this is one unconditional rule)
-    val clean = timed(cfg, "hygiene") {
-      val corpusFps = state.lineClean
-        .select(Dedup.fingerprint(Scrub.redact(col("text"))).as("fp"))
-        .distinct()
-      val verdicts = Scrub.cleanCorpus(lineClean, cfg.minQuality, cfg.maxTop2)
-      val known = lineClean
-        .select(col("doc_id"),
-          Dedup.fingerprint(Scrub.redact(col("text"))).as("fp"))
-        .join(corpusFps, Seq("fp"), "left_semi")
-        .select("doc_id")
-      barrier.materialize(spark,
+    // probe side = fingerprints of corpus lineClean: the union run's exact
+    // keeper is the min id per redacted fingerprint over the HYGIENE
+    // INPUT, which with the line stage on is lineClean(C ∪ D) — and =
+    // urlKept when off (lineClean aliases urlKept then, so this is one
+    // unconditional rule)
+    val (clean, fps) = timed(cfg, "hygiene") {
+      val red = Checkpointer.Local.cut(Scrub.redactedFrame(lineClean))
+      val fps = red.select("doc_id", "fp")
+      val verdicts = Scrub.cleanCorpusFrom(red, cfg.minQuality, cfg.maxTop2)
+      val known = fps.join(state.probe.fps, Seq("fp"), "left_semi").select("doc_id")
+      (barrier.materialize(spark,
         lineClean
           .join(verdicts.filter(col("admitted")).select("doc_id"), Seq("doc_id"))
           .join(known, Seq("doc_id"), "left_anti"),
-        "delta_clean")
+        "delta_clean"), fps)
     }
 
     // ---- stage 2: near-dup vs corpus ∪ within-delta ------------------
-    val deduped = timed(cfg, "neardup") {
-      val combined = state.clean.select(col("doc_id"), col("text"))
-        .unionByName(clean.select(col("doc_id"), col("text")))
-      val idx = Dedup.signatureIndex(combined,
-        cfg.shingleSize, cfg.numPerms, cfg.numBands)
+    val (deduped, sig) = timed(cfg, "neardup") {
+      val sig = Dedup.signatureIndex(clean, cfg.shingleSize, cfg.numPerms, cfg.numBands)
+      val idx = state.probe.sig.union(sig)
       val capped = Dedup.cappedBuckets(idx.banded, Dedup.MaxBandBucket)
       val cand = capped.as("l").join(capped.as("r"),
           col("l.band") === col("r.band") && col("l.bh") === col("r.bh") &&
@@ -517,8 +573,8 @@ object CorpusPipeline {
         .filter(col("doc_id") =!= col("cluster_id") &&
           col("doc_id") >= deltaFrom)
         .select(col("doc_id"))
-      barrier.materialize(spark,
-        clean.join(losers, Seq("doc_id"), "left_anti"), "delta_dedup")
+      (barrier.materialize(spark,
+        clean.join(losers, Seq("doc_id"), "left_anti"), "delta_dedup"), sig)
     }
 
     // ---- stages 2.2/2.3: novelty gates vs frozen corpus units --------
@@ -561,17 +617,16 @@ object CorpusPipeline {
     }
 
     // ---- stage 2.5: span scrub vs frozen corpus windows --------------
-    // probe side = state.gated, the corpus span-stage INPUT (aliases
-    // state.deduped when both novelty gates are off)
-    val scrubbed = timed(cfg, "span_scrub") {
-      if (cfg.scrubWindowTok <= 0) gated
+    // probe side = the windows of state.gated, the corpus span-stage
+    // INPUT (aliases state.deduped when both novelty gates are off)
+    val (scrubbed, wins) = timed(cfg, "span_scrub") {
+      val wins = spanWindows(gated, cfg)
+      if (cfg.scrubWindowTok <= 0) (gated, wins)
       else {
-        val idxWh = Substring.fastWindowFrame(state.gated, cfg.scrubWindowTok)
-          .select("wh")
-        val sc = Substring.scrubAgainst(gated, idxWh, cfg.scrubWindowTok)
+        val sc = Substring.scrubAgainst(gated, wins, state.probe.wins, cfg.scrubWindowTok)
           .filter(col("n_kept") > 0)
           .select(col("doc_id"), col("clean_text"))
-        barrier.materialize(spark, rewriteText(gated, sc), "delta_scrubbed")
+        (barrier.materialize(spark, rewriteText(gated, sc), "delta_scrubbed"), wins)
       }
     }
 
@@ -605,7 +660,7 @@ object CorpusPipeline {
       .orderBy("stage_idx")
 
     DeltaResult(scrubbed, verdicts, report, urlKept, lineClean, clean,
-      deduped, gated)
+      deduped, gated, Probe(fps, sig, wins))
   }
 
   /** Fold an admitted delta into the frozen corpus state, producing the
@@ -626,7 +681,11 @@ object CorpusPipeline {
     *   - `gated`    += the delta's novelty-gate survivors (the span
     *     stage's input frame; aliases `deduped` when both gates are off);
     *   - `scrubbed` += the admitted (post-scrub) rows — the consumer
-    *     output stage.
+    *     output stage;
+    *   - `probe`    ∪= the batch's own probe frames (fingerprints of its
+    *     hygiene input, signature index of its clean rows, windows of its
+    *     gated rows), so the merged probe is the probe of the merged
+    *     `lineClean`/`clean`/`gated` frames without touching their text.
     *
     * Mixing/packing stay the CORPUS's frames untouched: they are
     * corpus-global (rates depend on total token mass) and are re-cut
@@ -657,12 +716,15 @@ object CorpusPipeline {
       gated     = if ((state.gated eq state.deduped) && (d.gated eq d.deduped))
                     mergedDeduped
                   else state.gated.unionByName(d.gated),
-      scrubbed  = state.scrubbed.unionByName(d.admitted))
+      scrubbed  = state.scrubbed.unionByName(d.admitted),
+      probe     = state.probe.union(d.probe))
   }
 
-  /** Re-materialize the four probe-state frames through `barrier`,
-    * collapsing a k-way scan-union back to one scan each (see
-    * [[mergeDelta]]'s posture note). Names are `<prefix>_<stage>`.
+  /** Re-materialize the state frames through `barrier`, collapsing a
+    * k-way scan-union back to one scan each (see [[mergeDelta]]'s posture
+    * note), and re-cut the k-way [[Probe]] unions through
+    * [[graft.ops.Checkpointer.Local]] (blocks, not barrier tables). Names
+    * are `<prefix>_<stage>`.
     */
   def compactState(spark: SparkSession, state: Result, barrier: Barrier,
                    prefix: String): Result = {
@@ -676,6 +738,7 @@ object CorpusPipeline {
       // don't pay a second materialization for the same rows
       gated     = if (state.gated eq state.deduped) dedupedM
                   else barrier.materialize(spark, state.gated, s"${prefix}_gated"),
-      scrubbed  = barrier.materialize(spark, state.scrubbed, s"${prefix}_scrubbed"))
+      scrubbed  = barrier.materialize(spark, state.scrubbed, s"${prefix}_scrubbed"),
+      probe     = state.probe.map(Checkpointer.Local.cut))
   }
 }

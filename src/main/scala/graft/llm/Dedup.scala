@@ -247,7 +247,13 @@ object Dedup {
     * HDFS-backed cut that survives executor loss — the same trade
     * [[clusters]] makes for its iterative lineage.
     */
-  final case class SignatureIndex(banded: DataFrame, sets: DataFrame)
+  final case class SignatureIndex(banded: DataFrame, sets: DataFrame) {
+    /** Index of the union of two DISJOINT-id corpora: both members are
+      * per-doc rows, so this equals the index built over the union.
+      */
+    def union(o: SignatureIndex): SignatureIndex =
+      SignatureIndex(banded.unionByName(o.banded), sets.unionByName(o.sets))
+  }
 
   /** The corpus is tokenized/md5'd ONCE: the (doc_id, th) token-hash
     * frame is the checkpointed root — `th` becomes a STORED attribute —
@@ -422,6 +428,11 @@ object Dedup {
         dist.as("edit_dist"), round(sim, 6).as("edit_sim_r"))
   }
 
+  /** Round cap of [[clusters]]. Star rounds converge in O(log n), so 50
+    * covers any realistic component; hitting it means a logic regression.
+    */
+  val MaxClusterRounds = 50
+
   /** Near-duplicate clusters: connected components over a pair list
     * (a < b), labeling every member with the smallest doc_id reachable —
     * the standard dedup-grouping step after candidate verification.
@@ -479,12 +490,17 @@ object Dedup {
     var prevSig = (-1L, -1L)
     var sig = signature(e)
     var rounds = 0
-    while (sig != prevSig && rounds < 50) {
+    while (sig != prevSig && rounds < MaxClusterRounds) {
       e = cp.cut(smallStar(largeStar(e)))
       prevSig = sig
       sig = signature(e)
       rounds += 1
     }
+    // a labelling taken before convergence is not the component minimum:
+    // fail loudly rather than return it
+    require(sig == prevSig,
+      s"Dedup.clusters did not converge in $MaxClusterRounds star rounds " +
+        s"(edge signature still changing: $prevSig -> $sig)")
     // converged: e is (member, root) stars; add the root self-rows
     e.select(col("a").as("doc_id"), col("b").as("cluster_id"))
       .union(e.select(col("b").as("doc_id"), col("b").as("cluster_id")).distinct())

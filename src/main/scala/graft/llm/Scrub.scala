@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.ops.Checkpointer
 
 /** Corpus-hygiene operators for training-data pipelines: repetition
   * scoring (Gopher/RefinedWeb-style quality gates), PII redaction, and
@@ -122,14 +123,26 @@ object Scrub {
     * codegen'd aggregates, one fingerprint shuffle), so the composition adds
     * no new bottleneck.
     */
-  def cleanCorpus(docs: DataFrame, minQuality: Double, maxTop2: Double): DataFrame = {
-    // The redacted corpus feeds four consumers (repetition, quality, and
-    // both sides of the dedup layer); un-checkpointed, each reference
-    // re-runs the scan + double regex pass. Materializing the redacted
-    // text once is what a production pipeline does anyway (the raw-PII
-    // frame must not outlive this stage).
-    val red = docs.select(col("doc_id"), redact(col("text")).as("rtext"))
-      .localCheckpoint()
+  def cleanCorpus(docs: DataFrame, minQuality: Double, maxTop2: Double): DataFrame =
+    cleanCorpusFrom(Checkpointer.Local.cut(redactedFrame(docs)), minQuality, maxTop2)
+
+  /** (doc_id, rtext, fp): the redacted text and its exact-dedup
+    * fingerprint — the frame [[cleanCorpus]] cuts. The redacted corpus
+    * feeds four consumers (repetition, quality, and both sides of the
+    * dedup layer); un-cut, each reference re-runs the scan + double regex
+    * pass. Materializing it once is what a production pipeline does anyway
+    * (the raw-PII frame must not outlive this stage). `rtext` is a
+    * multi-use alias here, so the regex pass is not inlined into `fp`.
+    */
+  def redactedFrame(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), redact(col("text")).as("rtext"))
+      .select(col("doc_id"), col("rtext"), Dedup.fingerprint(col("rtext")).as("fp"))
+
+  /** [[cleanCorpus]] over a precomputed, cut [[redactedFrame]] `red` —
+    * the seam through which [[CorpusPipeline]] keeps the (doc_id, fp)
+    * columns of the cut as its exact-dedup probe.
+    */
+  def cleanCorpusFrom(red: DataFrame, minQuality: Double, maxTop2: Double): DataFrame = {
     // 2-gram-only repetition: the gate uses top2_frac_r alone, so the
     // 3-gram half of repetitionByKey's tagged explode would be dead rows
     // here (same values as its n=2 slice, asserted in ScrubSpec).
@@ -145,9 +158,7 @@ object Scrub {
         when(col("tot2") === 0, 0.0)
           .otherwise(round(col("top2").cast("double") / col("tot2"), 6))
           .as("top2_frac_r"))
-    // skinny (doc_id, fp) frame read by keepers AND the keeper join probe
-    val fps = red.select(col("doc_id"), Dedup.fingerprint(col("rtext")).as("fp"))
-      .localCheckpoint()
+    val fps = red.select("doc_id", "fp")
     val keepers = fps.groupBy("fp").agg(min("doc_id").as("keep_id"))
     val dd = fps.join(keepers, "fp")
       .select(col("doc_id"), (col("doc_id") === col("keep_id")).as("is_keeper"))

@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.ops.Checkpointer
 
 /** Exact substring-level duplication over rolling token windows — the
   * span-granular complement to document-level dedup ([[Dedup]]): a pair of
@@ -235,8 +236,14 @@ object Substring {
     * strictly removes tokens each pass, so it terminates; one pass is the
     * production trade.
     */
-  def scrub(docs: DataFrame, w: Int): DataFrame = {
-    val wins = fastWindowFrame(docs, w).localCheckpoint()
+  def scrub(docs: DataFrame, w: Int): DataFrame =
+    scrubWith(docs, Checkpointer.Local.cut(fastWindowFrame(docs, w)), w)
+
+  /** [[scrub]] over a precomputed, cut [[fastWindowFrame]] `wins` of
+    * `docs` — the seam through which [[CorpusPipeline]] keeps the cut as
+    * its span probe.
+    */
+  def scrubWith(docs: DataFrame, wins: DataFrame, w: Int): DataFrame = {
     val own = wins.groupBy("wh")
       .agg(countDistinct(col("doc_id")).as("nd"), min(col("doc_id")).as("owner"))
       .filter(col("nd") >= 2)
@@ -245,28 +252,32 @@ object Substring {
       wins.join(own, Seq("wh")).filter(col("doc_id") =!= col("owner")), w))
   }
 
-  /** [[scrub]] of a NEW batch against a FROZEN corpus window-fingerprint
-    * set (`indexWh`: a `wh` column — [[fastWindowFrame]] of the already-
-    * ingested corpus, reduced to DISTINCT fingerprints here; the index
-    * MUST come from the same fast-hash family or the probe join never
-    * matches). Ownership
-    * mirrors the union-run scrub under monotonic doc ids (every corpus id
-    * < every batch id): a batch window whose fingerprint exists in the
-    * corpus is always non-owner (the corpus carrier is the min id and
-    * keeps its copy — which it already has, so the corpus is never
+  /** [[scrubWith]] of a NEW batch against a FROZEN corpus
+    * window-fingerprint set. `newWins` is the batch's own cut
+    * [[fastWindowFrame]]; `indexWh` carries a `wh` column of the
+    * already-ingested corpus windows, reduced to DISTINCT fingerprints
+    * here (the index MUST come from the same fast-hash family or the
+    * probe join never matches). In [[CorpusPipeline.admitDelta]] the index
+    * is `state.probe.wins`: the window cut the corpus build's span stage
+    * made, extended by each merged batch's `newWins` and re-cut on
+    * compaction, so the corpus text is never re-tokenized per batch.
+    *
+    * Ownership mirrors the union-run scrub under monotonic doc ids (every
+    * corpus id < every batch id): a batch window whose fingerprint exists
+    * in the corpus is always non-owner (the corpus carrier is the min id
+    * and keeps its copy — which it already has, so the corpus is never
     * rewritten); fingerprints absent from the corpus fall back to
     * keep-one within the batch (min batch doc). Cost: linear in the batch
     * plus one distinct-reduce probe pass of the index — never a corpus
-    * rebuild ([[graft.llm.CorpusPipeline.admitDelta]] is the composed
-    * caller; equivalence to the union run is pinned in CorpusDeltaSpec).
+    * rebuild (equivalence to the union run is pinned in CorpusDeltaSpec).
     */
-  def scrubAgainst(newDocs: DataFrame, indexWh: DataFrame, w: Int): DataFrame = {
-    val wins = fastWindowFrame(newDocs, w).localCheckpoint()
+  def scrubAgainst(newDocs: DataFrame, newWins: DataFrame, indexWh: DataFrame,
+                   w: Int): DataFrame = {
     val inIdx = indexWh.select(col("wh")).distinct()
       .withColumn("in_idx", lit(true))
-    val own = wins.groupBy("wh")
+    val own = newWins.groupBy("wh")
       .agg(countDistinct(col("doc_id")).as("nd"), min(col("doc_id")).as("owner"))
-    val marked = wins.join(inIdx, Seq("wh"), "left").join(own, Seq("wh"))
+    val marked = newWins.join(inIdx, Seq("wh"), "left").join(own, Seq("wh"))
       .filter(coalesce(col("in_idx"), lit(false)) ||
         (col("nd") >= 2 && col("doc_id") =!= col("owner")))
     rebuildClean(newDocs, removalIndex(marked, w))

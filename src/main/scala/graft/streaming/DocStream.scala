@@ -461,12 +461,21 @@ object DocStream {
     * the one-shot `admitDelta` verdicts and admitted text exactly.
     *
     * 100 TB posture: each step's work is linear in the batch plus one
-    * probe pass per frozen stage (admitDelta's contract); state frames
-    * are scan-unions of barrier-materialized parquet, compacted back to
-    * one scan each every `compactEvery` steps so per-batch planning cost
-    * stays bounded over an unbounded stream. Barriers namespace per step
+    * read of the state's [[graft.llm.CorpusPipeline.Probe]] (admitDelta's
+    * contract): the hygiene fingerprints, the near-dup signature index and
+    * the span windows of everything admitted so far, as cut blocks. Each
+    * step's merge extends the probe with the batch's own three frames;
+    * state frames are scan-unions of barrier-materialized parquet and the
+    * probe is a union of cuts, and every `compactEvery` steps both are
+    * compacted (barrier tables and Checkpointer re-cuts) so per-batch
+    * planning cost stays bounded over an unbounded stream. An `initial`
+    * state reloaded from barrier tables needs its probe rebuilt first
+    * (`CorpusPipeline.deriveProbe`). Barriers namespace per step
     * (`b<k>_delta_*`) — a repeated plain barrier would overwrite the
     * prior batch's tables under the state frames still reading them.
+    *
+    * A step that throws leaves the state and the id watermark as they
+    * were, so a `foreachBatch` replay of the same batch is admitted.
     */
   final class CorpusAdmitter(spark: SparkSession,
                              initial: graft.llm.CorpusPipeline.Result,
@@ -495,10 +504,12 @@ object DocStream {
         require(ids.isNullAt(0) || ids.getLong(0) > maxSeen,
           s"CorpusAdmitter: batch min doc_id ${ids.getLong(0)} <= max already " +
             s"seen $maxSeen — ids must be monotonic across batches")
-        if (!ids.isNullAt(1)) maxSeen = math.max(maxSeen, ids.getLong(1))
         val d = CorpusPipeline.admitDelta(spark, st,
           batch, graft.MapPipeline.PrefixedBarrier(barrier, s"b$steps"), cfg)
         st = CorpusPipeline.mergeDelta(st, d)
+        // only a merged batch moves the watermark: a failed admission must
+        // stay retryable with the same ids
+        if (!ids.isNullAt(1)) maxSeen = math.max(maxSeen, ids.getLong(1))
         steps += 1
         if (compactEvery > 0 && steps % compactEvery == 0)
           st = CorpusPipeline.compactState(spark, st, barrier, s"c$steps")

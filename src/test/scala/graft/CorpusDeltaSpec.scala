@@ -208,6 +208,86 @@ class CorpusDeltaSpec extends SparkSpec {
     assert(ex.getMessage.contains("monotonic"), ex.getMessage)
   }
 
+  private def causedBy(e: Throwable, msg: String): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .exists(t => Option(t.getMessage).exists(_.contains(msg)))
+
+  private def poisonText(df: DataFrame, msg: String): DataFrame =
+    df.withColumn("text", expr(s"raise_error('$msg')").cast("string"))
+
+  test("CorpusAdmitter: a batch whose admission throws is admitted on a retry with the same ids") {
+    val (v1, t1) = oneShot
+    val adm = new graft.streaming.DocStream.CorpusAdmitter(spark, corpusState,
+      MapPipeline.PathBarrier(tmp("cd_rt")), cfg)
+    val batch = deltaDocs.take(6)
+    // the repartition keeps the optimizer from folding the poisoned
+    // projection over the local rows: the id scan prunes `text` and only
+    // admission reads it
+    val ex = intercept[Exception](
+      adm.step(poisonText(toDf(batch).repartition(2), "bad batch")))
+    assert(causedBy(ex, "bad batch"), s"the admission itself must throw: $ex")
+    val d = adm.step(toDf(batch))
+    val ids = batch.map(_._1).toSet
+    assert(d.verdicts.collect()
+      .map(r => r.getLong(0) -> Option(r.getString(1)).getOrElse("admitted")).toMap ==
+      v1.filter { case (id, _) => ids(id) }, "the retried batch gets its one-shot verdicts")
+    assert(d.admitted.select("doc_id", "text").collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap ==
+      t1.filter { case (id, _) => ids(id) })
+  }
+
+  test("admission is linear in the delta: the default gates never re-read corpus text") {
+    val dcfg = CorpusPipeline.Config()
+    val state = CorpusPipeline.run(spark, toDf(corpusDocs),
+      MapPipeline.PathBarrier(tmp("cd_lin")), dcfg)
+    val msg = "corpus text re-read"
+    val poisoned = state.copy(lineClean = poisonText(state.lineClean, msg),
+      clean = poisonText(state.clean, msg), gated = poisonText(state.gated, msg))
+    def out(d: CorpusPipeline.DeltaResult) = (
+      d.verdicts.collect()
+        .map(r => r.getLong(0) -> Option(r.getString(1)).getOrElse("admitted")).toMap,
+      d.admitted.select("doc_id", "text").collect()
+        .map(r => r.getLong(0) -> r.getString(1)).toMap)
+    def oneShotOf(st: CorpusPipeline.Result) = out(CorpusPipeline.admitDelta(spark, st,
+      toDf(deltaDocs), MapPipeline.PathBarrier(tmp("cd_lin_d")), dcfg))
+    def chainOf(st: CorpusPipeline.Result) = {
+      val adm = new graft.streaming.DocStream.CorpusAdmitter(spark, st,
+        MapPipeline.PathBarrier(tmp("cd_lin_ch")), dcfg)
+      deltaDocs.grouped(4).map(b => out(adm.step(toDf(b))))
+        .reduce((a, b) => (a._1 ++ b._1, a._2 ++ b._2))
+    }
+    val expected = oneShotOf(state)
+    // every probe-backed gate fires on the fixture: exact dup of corpus 1
+    // (fingerprints), near-dup chain to corpus 5 (signatures), corpus-owned
+    // span (windows)
+    assert(expected._1(105L) == "hygiene" && expected._1(108L) == "neardup" &&
+      expected._1(110L) == "neardup" && expected._2(111L) == uniq("dspan", 24),
+      s"${expected._1}")
+    assert(oneShotOf(poisoned) == expected, "one-shot admission re-read corpus text")
+    assert(chainOf(poisoned) == expected, "chained admission re-read corpus text")
+    assert(chainOf(state) == expected)
+  }
+
+  test("chained admission: the carried probe equals the probe derived from the merged state") {
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
+    for (compactEvery <- Seq(0, 1)) {
+      val adm = new graft.streaming.DocStream.CorpusAdmitter(spark, corpusState,
+        MapPipeline.PathBarrier(tmp("cd_pr")), cfg, compactEvery)
+      deltaDocs.grouped(5).foreach(b => adm.step(toDf(b)))
+      val carried = adm.state.probe
+      val derived = CorpusPipeline.deriveProbe(adm.state, cfg)
+      assert(rows(derived.fps).size == adm.state.lineClean.count() &&
+        rows(derived.wins).size > rows(corpusState.probe.wins).size,
+        "the derived probe covers the merged batches")
+      assert(rows(carried.fps) == rows(derived.fps), s"fps (compactEvery=$compactEvery)")
+      assert(rows(carried.sig.banded) == rows(derived.sig.banded),
+        s"sig.banded (compactEvery=$compactEvery)")
+      assert(rows(carried.sig.sets) == rows(derived.sig.sets),
+        s"sig.sets (compactEvery=$compactEvery)")
+      assert(rows(carried.wins) == rows(derived.wins), s"wins (compactEvery=$compactEvery)")
+    }
+  }
+
   test("remix over chained-admission state == the full run's mix + shards") {
     val adm = new graft.streaming.DocStream.CorpusAdmitter(spark, corpusState,
       MapPipeline.PathBarrier(tmp("cd_rm")), cfg)
